@@ -40,3 +40,20 @@ def test_dense_and_deterministic(spark, df):
 def test_no_single_partition_window(df):
     plan = global_row_number(df, ["k"])._jdf.queryExecution().executedPlan().toString()
     assert "Window" not in plan
+
+
+def test_rerun_after_source_rewrite_numbers_new_rows(spark, tmp_path):
+    """Numbering a re-read of a file rewritten in place (outside Spark,
+    so no cache refresh) must see the new rows: the materialization
+    shared by the count and enumeration passes must not leave a cache
+    entry that a later plan over the same path matches."""
+    path = tmp_path / "src.json"
+
+    def numbered():
+        df = spark.read.schema("k int").json(str(path))
+        return sorted(tuple(r) for r in global_row_number(df, ["k"]).collect())
+
+    path.write_text('{"k": 5}\n{"k": 6}\n')
+    assert numbered() == [(5, 1), (6, 2)]
+    path.write_text('{"k": 9}\n')
+    assert numbered() == [(9, 1)]

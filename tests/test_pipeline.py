@@ -459,3 +459,45 @@ def test_shp_reader_round_trips_against_wkt_twin(spark, tmp_path):
         ).collect()
     }
     assert got == {1: "West Box", 2: "East Box", 3: None}
+
+
+def test_rerun_after_raw_file_rewrite_reads_new_rows(spark, tmp_path):
+    """A second pass in the same session over a raw file rewritten in
+    place must number the new null-ID rows, not reuse the first pass's
+    rows (a cache entry matched by plan would return those)."""
+
+    def row(lat, day):
+        return {"occurrenceID": None, "eventDate": f"1901-01-{day:02d}",
+                "decimalLatitude": lat, "decimalLongitude": 1.0,
+                "species": "Delphinapterus leucas", "speciesid": 137115}
+
+    whale_dir = tmp_path / "beluga_whale"
+    whale_dir.mkdir()
+    path = whale_dir / "1900-01-01--1950-12-31.json"
+    ctx = PipelineContext(whale="beluga_whale", data_dir=str(tmp_path))
+
+    def null_id_rows():
+        cleaned = run_pipeline(spark, ctx).cleaned
+        return sorted(
+            (r["occurrenceID"], r["decimalLatitude"])
+            for r in cleaned.filter(F.col("occurrenceID").startswith("-")).collect()
+        )
+
+    path.write_text(json.dumps({"results": [row(45.0, 1), row(46.0, 2)]}))
+    assert null_id_rows() == [("-1", 45.0), ("-2", 46.0)]
+    path.write_text(json.dumps({"results": [row(10.0, 3)]}))
+    assert null_id_rows() == [("-1", 10.0)]
+
+
+def test_sinks_read_materialized_lineage_not_raw_scan(spark, result):
+    """A pass reads the raw zone once: the frames the sinks write read
+    the pipeline's materialization points, never the JSON scan, and the
+    session (built by ``get_spark``) runs without constraint propagation,
+    the optimizer cliff that made each of those sinks re-plan for
+    seconds."""
+    import re
+
+    for df in (result.cleaned, result.unrepaired_errors):
+        plan = df._jdf.queryExecution().optimizedPlan().toString()
+        assert not re.search(r"Relation \[[^\]]*\] json", plan)
+    assert spark.conf.get("spark.sql.constraintPropagation.enabled") == "false"

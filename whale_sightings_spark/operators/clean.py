@@ -61,12 +61,22 @@ def process_error_data(exploded: DataFrame) -> tuple[DataFrame, DataFrame]:
     split_dates over the raw eventDate; ``processed`` = all six parts
     nonzero. Repaired rows drop the detail columns and full-row-dedup
     (U3); unrepaired rows are returned for the JSON export.
+
+    The flagged rows are materialized (``localCheckpoint``) before the
+    split. Both channels filter on ``processed``, and Catalyst pushes
+    such a filter below the cascade's staging projections with the
+    whole cascade substituted in (a ~100 KB predicate with 85 regex
+    matches per row, evaluated next to the projection's own copy).
+    Over the leaf each channel filters a plain boolean column, and the
+    cascade runs once per error detail for both.
     """
     with_parts = with_date_parts(exploded, src="eventDate")
     processed_flag = F.lit(True)
     for f in DATE_PARTS_FIELDS:
         processed_flag = processed_flag & (F.col(f) != 0)
-    with_parts = with_parts.withColumn("processed", processed_flag)
+    with_parts = with_parts.withColumn("processed", processed_flag).localCheckpoint(
+        eager=False
+    )
 
     repaired = (
         with_parts.filter("processed")

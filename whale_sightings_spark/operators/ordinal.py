@@ -20,11 +20,15 @@ single-partition stage:
    turned into cumulative offsets on the driver and broadcast-joined
    back: global = offset[pid] + local.
 
-The ranged frame is persisted (MEMORY_AND_DISK) before the two passes:
-``repartitionByRange`` picks boundaries by sampling, and the count pass
-and the enumeration pass MUST see the same partition assignment — two
-independent recomputations are not guaranteed to. Persisting makes the
-assignment a materialized fact instead of a replayed sample.
+The ranged frame is materialized (``localCheckpoint``, MEMORY_AND_DISK)
+before the two passes: ``repartitionByRange`` picks boundaries by
+sampling, and the count pass and the enumeration pass MUST see the same
+partition assignment — two independent recomputations are not
+guaranteed to. The checkpoint makes the assignment a materialized fact
+instead of a replayed sample. It is not a ``persist``: a cache entry
+would outlive the call, and Spark's cache manager matches cached data
+by plan, so a later read of the same path would get this call's rows
+even after the file changed.
 
 Wall-clock cost is one range shuffle — the same price as the sort the
 global window would have needed — but the enumeration itself is fully
@@ -64,7 +68,7 @@ def global_row_number(
         df.repartitionByRange(n, *order)
         .sortWithinPartitions(*order)
         .withColumn(_PID, F.spark_partition_id())
-        .persist(StorageLevel.MEMORY_AND_DISK)
+        .localCheckpoint(eager=False, storageLevel=StorageLevel.MEMORY_AND_DISK)
     )
 
     # fresh StructType — StructType.add mutates in place, which would

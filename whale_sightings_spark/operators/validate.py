@@ -124,6 +124,12 @@ def occurrence_validation_details(df: DataFrame) -> Column:
     return F.array_compact(F.array(*checks))
 
 
+def flag_occurrences(df: DataFrame) -> DataFrame:
+    """Raw occurrences plus the ``details`` array — the frame both
+    channels of :func:`split_flagged` filter."""
+    return df.withColumn("details", occurrence_validation_details(df))
+
+
 def validate_occurrences(df: DataFrame) -> tuple[DataFrame, DataFrame]:
     """Split raw occurrences into (valid, errors).
 
@@ -133,9 +139,12 @@ def validate_occurrences(df: DataFrame) -> tuple[DataFrame, DataFrame]:
 
     Error channel: original raw values + the ``details`` array.
     """
-    passthrough = [c for c in df.columns if c in ORDINAL_COLS]
-    flagged = df.withColumn("details", occurrence_validation_details(df))
+    return split_flagged(flag_occurrences(df))
 
+
+def split_flagged(flagged: DataFrame) -> tuple[DataFrame, DataFrame]:
+    """The (valid, errors) split of a :func:`flag_occurrences` frame."""
+    passthrough = [c for c in flagged.columns if c in ORDINAL_COLS]
     valid = flagged.filter(F.size("details") == 0).select(
         F.col("occurrenceID"),
         normalize_event_date(F.col("eventDate")).alias("eventDate"),

@@ -3,9 +3,23 @@ lineage from raw-zone JSON to the curated frame + star schema.
 
 Reference lifecycle (``main.py:33-50``): fetch -> validate -> clean ->
 load, eager and single-threaded with file checkpoints between stages.
-Here stages 2-4 are one Catalyst plan; actions happen only at sinks.
-The only wide operators are the dedup window and the dim aggregations —
-every dim join broadcasts (SURVEY §7.0).
+Here stages 2-4 are one lazy lineage cut at two in-memory
+materialization points (``localCheckpoint``), so a pass plans and reads
+the heavy part of it once:
+
+1. the validated frame (raw rows + ``details``): the JSON scan and the
+   validation predicates run once, not once per channel and per sink;
+   the error export reads it (through the repair's own materialization,
+   see ``process_error_data``);
+2. the deduped merged frame: the two date cascades, the repair and the
+   dedup window are planned and computed once. ``fill_in``'s numbering
+   actions, the curated write, the bounds action, ``--csv`` and
+   ``build_star_schema`` all read this leaf.
+
+Without them every action re-planned the full scan -> validate ->
+date-cascade lineage (seconds of driver time each) and replayed the
+raw scan. The only wide operators are the dedup window and the dim
+aggregations — every dim join broadcasts (SURVEY §7.0).
 """
 
 from __future__ import annotations
@@ -32,7 +46,7 @@ from whale_sightings_spark.operators.dims import (
     resolve_water_body_fk,
 )
 from whale_sightings_spark.operators.spatial import spatial_join_water_body
-from whale_sightings_spark.operators.validate import validate_occurrences
+from whale_sightings_spark.operators.validate import flag_occurrences, split_flagged
 from whale_sightings_spark.sources.files import match_raw_files, read_raw_occurrences
 from whale_sightings_spark.whales import WHALE_NAMES
 
@@ -72,9 +86,11 @@ def clean_occurrences(
 
     raw -> validation split (P1-P3) -> error explode + repair (F12/P6)
     -> union (U1) -> date validity (P4) -> keep-first dedup (W2) ->
-    fills (W1/F7/F8) -> spatial join (J1).
+    fills (W1/F7/F8) -> spatial join (J1), materialized after the
+    validation flags and after the dedup (module docstring).
     """
-    valid, errors = validate_occurrences(raw)
+    flagged = flag_occurrences(raw).localCheckpoint(eager=False)
+    valid, errors = split_flagged(flagged)
     valid = with_date_parts(valid, src="eventDate")
 
     exploded = explode_error_details(errors)
@@ -82,7 +98,7 @@ def clean_occurrences(
 
     merged = merge_channels(valid, repaired)
     merged = with_date_validity(merged)
-    merged = dedup_keep_first(merged)
+    merged = dedup_keep_first(merged).localCheckpoint(eager=False)
     merged = fill_in(merged, ctx.whale)
     if oceans is not None:
         merged = spatial_join_water_body(merged, oceans)

@@ -3067,9 +3067,10 @@ _HARDNEG_K = 3
 def q237_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     from pyspark.sql import Window as W
 
+    n_queries = 5
     emb = load_table(spark, sf_dir, "embeddings")
     topk = SIM.ivfpq_topk_from_index(
-        spark, emb, _ivfpq_index_dir(spark, sf_dir)
+        spark, emb, _ivfpq_index_dir(spark, sf_dir), n_queries=n_queries
     )
     # topk is bounded (|Q|·k rows) but the label table is corpus-scale:
     # semi-join each label side down to the ids topk actually touches
@@ -3078,7 +3079,11 @@ def q237_hard_negative_mining(spark: SparkSession, sf_dir: str) -> DataFrame:
     topk = topk.localCheckpoint(eager=False)
     lab = emb.select("vec_id", "label")
     ql = (
-        lab.withColumnRenamed("vec_id", "query_id")
+        # the query ids are the first n_queries vec_ids: stated here so
+        # the bound reaches the label scan (the session does not infer
+        # it through the checkpoint's constraints)
+        lab.filter(F.col("vec_id") < n_queries)
+        .withColumnRenamed("vec_id", "query_id")
         .withColumnRenamed("label", "query_label")
         .join(
             F.broadcast(topk.select("query_id").distinct()),

@@ -9,7 +9,18 @@ design point:
   in both directions — override per-deploy on a cluster);
 - Arrow enabled for every pandas interchange (vectorized UDF path);
 - session timezone pinned to UTC so timestamp semantics match the
-  DuckDB oracle and are deploy-independent.
+  DuckDB oracle and are deploy-independent;
+- constraint propagation off. The pipeline's date cascades alias dozens
+  of derived columns, and ``PruneFilters`` recomputes
+  ``child.constraints`` over all of them on every optimizer iteration.
+  Optimizing the (unmaterialized) deduped merged frame of a 5k-row
+  window took 8.3 s cold / 5.5 s warm on a 4-core host, 6.7 s of it in
+  ``PruneFilters`` (10 runs, none of which changed the plan). With
+  propagation off the same frame optimizes in 1.4 s cold / 0.9 s warm
+  into the same plan. Stated filters are still pushed to the sources;
+  only filters *inferred* from constraints (``isnotnull`` on join keys,
+  a bound carried across a join) are no longer added, so a bound a
+  query relies on is written where the scan can see it.
 """
 
 from __future__ import annotations
@@ -40,6 +51,7 @@ def get_spark(
         .config("spark.sql.adaptive.coalescePartitions.enabled", "true")
         .config("spark.sql.adaptive.skewJoin.enabled", "true")
         .config("spark.sql.session.timeZone", "UTC")
+        .config("spark.sql.constraintPropagation.enabled", "false")
         .config("spark.sql.execution.arrow.pyspark.enabled", "true")
         # Python Data Source filter pushdown (R2: the obis source
         # absorbs eventDate/species predicates into request params)
